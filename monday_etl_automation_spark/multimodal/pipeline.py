@@ -242,11 +242,6 @@ def scanned_pdf(
 # B4/B5 — compress + sign + rename (the /sign-pdf/ composition)
 # ---------------------------------------------------------------------------
 
-B5_SCHEMA = (
-    "doc_id BIGINT, file_name STRING, n_pages BIGINT, out_bytes BIGINT, out_sha STRING"
-)
-
-
 def sign_pipeline(
     docs_bin: DataFrame,
     signer: str = "engine",

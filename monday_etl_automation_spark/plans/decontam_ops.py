@@ -359,27 +359,12 @@ def pii_counts_exprs(
     return found, residual
 
 
-def pii_aug_cte(dialect: str, prefix: str = "") -> str:
-    """``{prefix}aug(doc_id, text)``: the corpus with the pii_text_expr
-    plant applied."""
-    return f"""{prefix}aug AS (
+def pii_aug_cte(dialect: str) -> str:
+    """``aug(doc_id, text)``: the corpus with the pii_text_expr plant
+    applied."""
+    return f"""aug AS (
   SELECT doc_id, {pii_text_expr(dialect)} AS text
   FROM documents
-)"""
-
-
-def pii_counts_ctes(dialect: str, prefix: str) -> str:
-    """WITH-fragment ending in ``{prefix}pii(doc_id, pii_found,
-    residual_pii)`` — pii_counts_exprs over the planted-aug corpus
-    (the standalone relation-level form; text_profile inlines the same
-    expressions over its single corpus pass)."""
-    found, residual = pii_counts_exprs(dialect)
-    return f"""{pii_aug_cte(dialect, prefix)},
-{prefix}pii AS (
-  SELECT doc_id,
-         CAST({found} AS BIGINT) AS pii_found,
-         CAST({residual} AS BIGINT) AS residual_pii
-  FROM {prefix}aug
 )"""
 
 

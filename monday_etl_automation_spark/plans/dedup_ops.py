@@ -363,11 +363,6 @@ ORDER BY doc_id
 """.strip()
 
 
-def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_simhash_sql("spark"))
-
-
 # pigeonhole-complete for the 4-band split: every pair with hamming
 # <= 3 must agree on at least one band, so the banded join finds ALL
 # of them (no recall loss vs the O(n^2) scan)

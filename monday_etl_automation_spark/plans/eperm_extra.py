@@ -31,10 +31,6 @@ per-pass cost is the read path a dataloader manifest check pays.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,7 +40,13 @@ from monday_etl_automation_spark.sources.shard_writer import (
     shuffled_file_width,
     write_shuffled_split,
 )
-from monday_etl_automation_spark.sources.tables import register_views
+from monday_etl_automation_spark.sources.tables import (
+    drop_scratch_dir,
+    register_views,
+    scratch_dir,
+    session_artifact_cache,
+    snapshot_key,
+)
 
 _EPERM_FILES = 8
 _EPERM_EPOCHS = (0, 1)
@@ -59,39 +61,18 @@ _DUCK_EPOCH_SHUF = (
 
 # --- Spark side ---------------------------------------------------------------
 
-_EP_DIRS: set[str] = set()
-
-
-def _drop_ep_dir(entry) -> None:
-    if isinstance(entry, tuple) and entry and isinstance(entry[0], str):
-        _EP_DIRS.discard(entry[0])
-        shutil.rmtree(entry[0], ignore_errors=True)
-
-
-@atexit.register
-def _drop_all_ep_dirs() -> None:
-    for path in list(_EP_DIRS):
-        shutil.rmtree(path, ignore_errors=True)
-    _EP_DIRS.clear()
-
 
 def _eperm_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     """(base_path,) — both epochs written ONCE per (session, documents
     snapshot) through the real writer; superseded snapshots rmtree on
     eviction (the vstream/tokp artifact discipline)."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
-
     register_views(spark, sf_dir)
-    cache = session_artifact_cache(spark, "eperm_split", on_evict=_drop_ep_dir)
+    cache = session_artifact_cache(spark, "eperm_split", on_evict=drop_scratch_dir)
     key = (snapshot_key(sf_dir, "documents"),)
     hit = cache.get(key)
     if hit is not None:
         return hit
-    base = tempfile.mkdtemp(prefix="eperm_split_")
-    _EP_DIRS.add(base)
+    base = scratch_dir("eperm_split_")
     for e in _EPERM_EPOCHS:
         write_shuffled_split(
             spark, sf_dir, f"{base}/epoch={e}", epoch=e, n_files=_EPERM_FILES

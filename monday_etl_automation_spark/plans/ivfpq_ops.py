@@ -55,8 +55,10 @@ from monday_etl_automation_spark.plans.embed_ops import (
 )
 from monday_etl_automation_spark.plans.pq_ops import (
     _K,
+    _M,
     _PQ_ITERS,
     _SUBDIM,
+    _codes_arr_sql,
     _pq_cent0_sql,
     _pq_cent_next_sql,
     _pq_codes_sql,
@@ -438,16 +440,14 @@ def _ivfpq_search_arr_meta(spark: SparkSession, sf_dir: str) -> dict[str, DataFr
         meta["lut"].createOrReplaceTempView("_ipq_arr_lut")
         meta["vstats"].createOrReplaceTempView("_ipq_arr_vstats")
         lutarr = spark.sql(
-            f"""SELECT qid, transform(sequence(0, {16 * _K - 1}),
+            f"""SELECT qid, transform(sequence(0, {_M * _K - 1}),
                         i -> coalesce(m[i], CAST(0 AS BIGINT))) AS pa
 FROM (SELECT qid, map_from_entries(collect_list(struct(sub * {_K} + code, pdot))) AS m
       FROM _ipq_arr_lut GROUP BY qid)"""
         ).localCheckpoint(eager=True)
         varr = spark.sql(
             f"""SELECT p.vec_id, p.cid, p.ca, s.rr_sum, s.cr_sum
-FROM (SELECT vec_id, cid, transform(sequence(0, 15), i -> m[i]) AS ca
-      FROM (SELECT vec_id, cid, map_from_entries(collect_list(struct(sub, code))) AS m
-            FROM _ipq_arr_vparts GROUP BY vec_id, cid)) p
+FROM ({_codes_arr_sql("_ipq_arr_vparts", "vec_id, cid")}) p
 JOIN _ipq_arr_vstats s ON p.vec_id = s.vec_id"""
         ).localCheckpoint(eager=True)
         hit = {"lutarr": lutarr, "varr": varr,

@@ -364,14 +364,24 @@ FROM (SELECT qid, map_from_entries(collect_list(struct(sub * {_K} + code, pdot))
         ).localCheckpoint(eager=True)
         codesarr = spark.sql(
             f"""SELECT c.vec_id, c.ca, v.vnorm
-FROM (SELECT vec_id, transform(sequence(0, {_M - 1}), s -> m[s]) AS ca
-      FROM (SELECT vec_id, map_from_entries(collect_list(struct(sub, code))) AS m
-            FROM _pq_arr_codes GROUP BY vec_id)) c
+FROM ({_codes_arr_sql("_pq_arr_codes", "vec_id")}) c
 JOIN _pq_arr_vn v ON c.vec_id = v.vec_id"""
         ).localCheckpoint(eager=True)
         hit = (lutarr, codesarr)
         cache[key] = hit
     return hit
+
+
+def _codes_arr_sql(codes_view: str, keys: str) -> str:
+    """One row per vector — (keys, ca) with ca[s] the code of subspace
+    s — from a (keys, sub, code) codes relation. A vector missing one
+    of its {_M} code rows would read a NULL slot and silently rank
+    last in every ADC search, so the per-vector row count is asserted
+    instead (the build is one-off per snapshot, so the check is free)."""
+    return f"""SELECT {keys}, transform(sequence(0, {_M - 1}), s -> m[s]) AS ca
+FROM (SELECT {keys}, count(*) AS n, map_from_entries(collect_list(struct(sub, code))) AS m
+      FROM {codes_view} GROUP BY {keys})
+WHERE assert_true(n = {_M}, 'ADC codes: a vector lacks one of its {_M} (sub, code) rows') IS NULL"""
 
 
 def _adc_arr_expr(lut_alias: str = "l", codes_alias: str = "a") -> str:

@@ -57,10 +57,6 @@ reference has no training-data surface at all — this is north-star
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -360,22 +356,6 @@ GROUP BY shard
 
 # --- tokenized shard artifact -------------------------------------------------
 
-_TOKP_DIRS: set[str] = set()
-
-
-def _drop_tokp_dir(entry) -> None:
-    if isinstance(entry, tuple) and entry and isinstance(entry[0], str):
-        _TOKP_DIRS.discard(entry[0])
-        shutil.rmtree(entry[0], ignore_errors=True)
-
-
-@atexit.register
-def _drop_all_tokp_dirs() -> None:
-    for path in list(_TOKP_DIRS):
-        shutil.rmtree(path, ignore_errors=True)
-    _TOKP_DIRS.clear()
-
-
 def _tokenized_shard_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     """(shard dir, manifest DataFrame) — built ONCE per (session,
     documents snapshot), like every persisted index: a release is a
@@ -385,17 +365,18 @@ def _tokenized_shard_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     from monday_etl_automation_spark.plans.tokenize_ops import packed_token_sequences
     from monday_etl_automation_spark.sources.shard_writer import write_tokenized_shards
     from monday_etl_automation_spark.sources.tables import (
+        drop_scratch_dir,
+        scratch_dir,
         session_artifact_cache,
         snapshot_key,
     )
 
-    cache = session_artifact_cache(spark, "tokp_shards", on_evict=_drop_tokp_dir)
+    cache = session_artifact_cache(spark, "tokp_shards", on_evict=drop_scratch_dir)
     key = (snapshot_key(sf_dir, "documents"),)
     hit = cache.get(key)
     if hit is not None:
         return hit
-    out = tempfile.mkdtemp(prefix="tokp_shards_")
-    _TOKP_DIRS.add(out)
+    out = scratch_dir("tokp_shards_")
     # corpus-adaptive budget: BPE counts of a 64-word chunk ride the
     # corpus's word lengths, and the testdata REGENERATES between
     # rounds — a fixed 512 would turn the whole entry red the round a

@@ -40,10 +40,6 @@ the read path a search service actually pays.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,7 +61,13 @@ from monday_etl_automation_spark.plans.pq_ops import (
     _pq_ex_sql,
     pq_train_ctes,
 )
-from monday_etl_automation_spark.sources.tables import register_views
+from monday_etl_automation_spark.sources.tables import (
+    drop_scratch_dir,
+    register_views,
+    scratch_dir,
+    session_artifact_cache,
+    snapshot_key,
+)
 
 _VS_MOD = 7
 _VS_RES = 3
@@ -105,21 +107,6 @@ def _key(dialect: str, parts: list[str]) -> str:
 
 # --- Spark side ---------------------------------------------------------------
 
-_VS_DIRS: set[str] = set()
-
-
-def _drop_vs_dir(entry) -> None:
-    if isinstance(entry, tuple) and entry and isinstance(entry[0], str):
-        _VS_DIRS.discard(entry[0])
-        shutil.rmtree(entry[0], ignore_errors=True)
-
-
-@atexit.register
-def _drop_all_vs_dirs() -> None:
-    for path in list(_VS_DIRS):
-        shutil.rmtree(path, ignore_errors=True)
-    _VS_DIRS.clear()
-
 
 def _ingest_artifact(spark: SparkSession, sf_dir: str):
     """(base_path, sink) — the 3-batch ingest, run ONCE per (session,
@@ -127,20 +114,15 @@ def _ingest_artifact(spark: SparkSession, sf_dir: str):
     eviction. The REAL sink runs: its anti-join skip, deterministic
     dirty-batch pick, and dynamic-partition-overwrite writes are all
     on the path the hash then verifies."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
     from monday_etl_automation_spark.streaming.vector_ingest import VectorIngestSink
 
     register_views(spark, sf_dir)
-    cache = session_artifact_cache(spark, "vstream_ingest", on_evict=_drop_vs_dir)
+    cache = session_artifact_cache(spark, "vstream_ingest", on_evict=drop_scratch_dir)
     key = (snapshot_key(sf_dir, "embeddings"),)
     hit = cache.get(key)
     if hit is not None:
         return hit
-    base = tempfile.mkdtemp(prefix="vstream_ingest_")
-    _VS_DIRS.add(base)
+    base = scratch_dir("vstream_ingest_")
     sink = VectorIngestSink(spark, sf_dir, base)
     synth = spark.sql(_SYNTH).localCheckpoint(eager=True)
     sink.process_batch(synth.where("vec_id % 3 = 0"), 1)

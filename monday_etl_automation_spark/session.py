@@ -21,6 +21,21 @@ def _cpus() -> int:
         return 32
 
 
+def _driver_mem() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else 48g capped at half the host's
+    RAM: the local-mode JVM grows its heap toward the cap before it
+    collects hard, and a cap above the machine's memory gets the JVM
+    killed by the kernel mid-run instead."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    except (ValueError, OSError):
+        return "48g"
+    return f"{min(48 << 10, ram_mb // 2)}m"
+
+
 def get_spark(app_name: str = "monday_etl_automation_spark") -> SparkSession:
     """Create (or reuse) the engine's SparkSession.
 
@@ -41,7 +56,7 @@ def get_spark(app_name: str = "monday_etl_automation_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

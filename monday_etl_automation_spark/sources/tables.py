@@ -10,7 +10,10 @@ DataFrames and all pruning happens in the optimizer.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -236,6 +239,40 @@ class _ArtifactCache(dict):
                 except Exception:  # noqa: BLE001
                     pass
         dict.clear(self)
+
+
+# Every directory the engine creates for itself — streaming checkpoints,
+# split sources, default sink paths, persisted artifacts — comes from
+# scratch_dir and is removed by drop_scratch_dir (per-run dirs, cache
+# eviction) or at interpreter exit. Paths a caller passes in are never
+# registered, so they are never deleted.
+_SCRATCH_DIRS: set[str] = set()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh engine-owned temp dir (removed at exit at the latest)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH_DIRS.add(path)
+    return path
+
+
+def drop_scratch_dir(entry) -> None:
+    """Remove a scratch dir now. ``entry`` is its path, or a cached
+    artifact tuple whose first element is the path — the shape every
+    ``on_evict=drop_scratch_dir`` cache stores. Unregistered paths are
+    left alone."""
+    path = entry[0] if isinstance(entry, tuple) else entry
+    try:
+        _SCRATCH_DIRS.remove(path)  # one atomic check-and-unregister
+    except KeyError:
+        return
+    shutil.rmtree(path, ignore_errors=True)
+
+
+@atexit.register
+def _drop_all_scratch_dirs() -> None:
+    for path in list(_SCRATCH_DIRS):
+        drop_scratch_dir(path)
 
 
 def session_artifact_cache(spark: SparkSession, tag: str, on_evict=None) -> dict:

@@ -21,19 +21,22 @@ is identical from the first transformation on.
 
 from __future__ import annotations
 
-import atexit
 import glob
 import os
-import shutil
-import tempfile
 import threading
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from monday_etl_automation_spark.sources.tables import load_table, normalize_ts
+from monday_etl_automation_spark.sources.tables import (
+    drop_scratch_dir,
+    load_table,
+    normalize_ts,
+    scratch_dir,
+)
 
 # Stateful streaming stages instantiate ONE state store per shuffle
 # partition, and every micro-batch commits a delta file (+CRC) per
@@ -77,6 +80,32 @@ def _replay_partitions(spark: SparkSession):
             spark._mea_replay_depth -= 1  # noqa: SLF001
             if spark._mea_replay_depth == 0:
                 spark.conf.set(key, spark._mea_replay_saved)  # noqa: SLF001
+
+
+def _run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """The one way a streaming query starts here: run a configured
+    ``writer`` (a memory sink with its output mode, or foreachBatch)
+    to completion under an availableNow trigger, at the replay shuffle
+    width, on a fresh checkpoint. Every replay starts from nothing and
+    nothing resumes from it, so the checkpoint is dropped as soon as
+    the query ends."""
+    ckpt = scratch_dir("ckpt_")
+    try:
+        with _replay_partitions(spark):
+            q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+            q.awaitTermination()
+    finally:
+        drop_scratch_dir(ckpt)
+
+
+def _replay(df: DataFrame, sink: str, mode: str = "complete") -> DataFrame:
+    """availableNow replay of a streaming frame into the memory sink
+    ``sink`` (complete mode: the final table IS the batch answer);
+    returns the sink table."""
+    _run_available_now(
+        df.sparkSession, df.writeStream.format("memory").queryName(sink).outputMode(mode)
+    )
+    return df.sparkSession.table(sink)
 
 
 def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,21 +250,10 @@ def run_interval_join_replay(
 ) -> DataFrame:
     """availableNow replay of the stream-stream interval join (append
     mode — inner interval joins emit rows as watermarks close)."""
-    sink = f"ssjoin_{uuid.uuid4().hex[:8]}"
     joined = stream_stream_interval_join(
         event_stream(spark, sf_dir), event_stream(spark, sf_dir), window_seconds
     )
-    with _replay_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssj_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return _replay(joined, f"ssjoin_{uuid.uuid4().hex[:8]}", "append")
 
 
 def run_error_context_replay(
@@ -250,21 +268,10 @@ def run_error_context_replay(
     Round 15: this puts the stream-stream interval join under the
     driver hash (it was pytest-only), union-tagged into
     temporal_joins."""
-    sink = f"ssctx_{uuid.uuid4().hex[:8]}"
     left = event_stream(spark, sf_dir).where(F.col("event_type") == "error")
     joined = stream_stream_interval_join(left, event_stream(spark, sf_dir), window_seconds)
-    with _replay_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssc_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(sink)
+        _replay(joined, f"ssctx_{uuid.uuid4().hex[:8]}", "append")
         .groupBy(
             F.col("l_event_id").alias("event_id"),
             F.col("l_user_id").alias("user_id"),
@@ -285,39 +292,21 @@ def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def _replay(agg: DataFrame, sink: str) -> None:
-    """availableNow replay of a streaming aggregation into a memory
-    sink (complete mode: the final table IS the batch answer)."""
-    with _replay_partitions(agg.sparkSession):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
 def run_replay(spark: SparkSession, sf_dir: str, name: str | None = None) -> DataFrame:
     """Full availableNow replay of the tumbling aggregation; returns
     the final (batch-equal) result."""
     sink = name or f"replay_{uuid.uuid4().hex[:8]}"
-    _replay(tumbling_counts(event_stream(spark, sf_dir)), sink)
-    return spark.table(sink)
+    return _replay(tumbling_counts(event_stream(spark, sf_dir)), sink)
 
 
 def run_sliding_replay(spark: SparkSession, sf_dir: str, name: str | None = None) -> DataFrame:
     sink = name or f"sliding_{uuid.uuid4().hex[:8]}"
-    _replay(sliding_stats(event_stream(spark, sf_dir)), sink)
-    return spark.table(sink)
+    return _replay(sliding_stats(event_stream(spark, sf_dir)), sink)
 
 
 def run_session_replay(spark: SparkSession, sf_dir: str, name: str | None = None) -> DataFrame:
     sink = name or f"session_{uuid.uuid4().hex[:8]}"
-    _replay(session_stats(event_stream(spark, sf_dir)), sink)
-    return spark.table(sink)
+    return _replay(session_stats(event_stream(spark, sf_dir)), sink)
 
 
 def stateful_user_totals_stream(events: DataFrame) -> DataFrame:
@@ -392,21 +381,10 @@ def run_stateful_replay(spark: SparkSession, sf_dir: str, name: str | None = Non
             return hit
 
     sink = name or f"stateful_{uuid.uuid4().hex[:8]}"
-    with _replay_partitions(spark):
-        q = (
-            stateful_user_totals_stream(event_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_state_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    updates = _replay(stateful_user_totals_stream(event_stream(spark, sf_dir)), sink, "update")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     result = (
-        spark.table(sink)
-        .withColumn("_rn", F.row_number().over(w))
+        updates.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -535,24 +513,6 @@ def sessionize_with_timers(events: DataFrame, gap_seconds: int = 300) -> DataFra
     )
 
 
-# Live timer-replay source dirs (one per cached variant). Eviction and
-# interpreter exit both route through _drop_replay_dir so a long
-# driver/bench session's regenerations cannot accumulate orphan dirs.
-_REPLAY_SRC_DIRS: set[str] = set()
-
-
-def _drop_replay_dir(path) -> None:
-    if isinstance(path, str):
-        _REPLAY_SRC_DIRS.discard(path)
-        shutil.rmtree(path, ignore_errors=True)
-
-
-@atexit.register
-def _drop_all_replay_dirs() -> None:
-    for path in list(_REPLAY_SRC_DIRS):
-        _drop_replay_dir(path)
-
-
 def _timer_replay_source(
     spark: SparkSession, sf_dir: str, ev: DataFrame, variant: tuple
 ) -> str:
@@ -585,17 +545,15 @@ def _timer_replay_source(
 
     n_splits = variant[0]
     # superseded snapshots' source dirs are deleted on eviction (the
-    # cache drops only the path string; the directory itself would
-    # otherwise outlive every testdata regeneration and replay
-    # variant), and any dirs still cached at interpreter exit go too
-    cache = session_artifact_cache(spark, "timer_replay_src", on_evict=_drop_replay_dir)
+    # directory would otherwise outlive every testdata regeneration
+    # and replay variant), and any still cached at exit go too
+    cache = session_artifact_cache(spark, "timer_replay_src", on_evict=drop_scratch_dir)
     key = (snapshot_key(sf_dir, "events"), variant)
     hit = cache.get(key)
     if hit is not None:
-        return hit
+        return hit[0]
 
-    src = tempfile.mkdtemp(prefix="timer_src_")
-    _REPLAY_SRC_DIRS.add(src)
+    src = scratch_dir("timer_src_")
     idxed = with_global_index(ev, ["ts", "event_id"], name="_rn")
     total = ev.count()
     sliced = (
@@ -615,7 +573,7 @@ def _timer_replay_source(
             .parquet(src)
         )
         _time.sleep(0.05)  # distinct mtimes at ms resolution
-    cache[key] = src
+    cache[key] = (src,)
     return src
 
 
@@ -649,27 +607,15 @@ def run_timer_sessions_replay(
         .option("latestFirst", "false")
         .parquet(src)
     )
-    sink = f"timer_sess_{uuid.uuid4().hex[:8]}"
-    with _replay_partitions(spark):
-        q = (
-            sessionize_with_timers(stream, gap_seconds)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_timer_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        spark.table(sink)
-        .select(
-            "user_id",
-            F.timestamp_micros(F.col("start_us")).alias("session_start"),
-            F.timestamp_micros(F.col("last_us")).alias("session_last"),
-            "n_events",
-            "sum_micros",
-        )
+    sessions = _replay(
+        sessionize_with_timers(stream, gap_seconds), f"timer_sess_{uuid.uuid4().hex[:8]}", "append"
+    )
+    return sessions.select(
+        "user_id",
+        F.timestamp_micros(F.col("start_us")).alias("session_start"),
+        F.timestamp_micros(F.col("last_us")).alias("session_last"),
+        "n_events",
+        "sum_micros",
     )
 
 
@@ -823,34 +769,19 @@ def run_stateful_tws_replay(
     spark: SparkSession, sf_dir: str, initial_state=None, events: DataFrame | None = None
 ) -> DataFrame:
     """availableNow replay of the transformWithState totals operator."""
-    sink = f"tws_{uuid.uuid4().hex[:8]}"
     stream = events if events is not None else event_stream(spark, sf_dir)
-    q = (
-        stateful_user_totals_tws(stream, initial_state=initial_state)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_tws_"))
-        .trigger(availableNow=True)
-        .start()
+    updates = _replay(
+        stateful_user_totals_tws(stream, initial_state=initial_state),
+        f"tws_{uuid.uuid4().hex[:8]}",
+        "update",
     )
-    q.awaitTermination()
-    return _reduce_updates_to_final(spark.table(sink), ["user_id"])
+    return _reduce_updates_to_final(updates, ["user_id"])
 
 
 def run_type_counts_tws_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sink = f"twsmap_{uuid.uuid4().hex[:8]}"
-    q = (
-        event_type_counts_tws(event_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_twsmap_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _reduce_updates_to_final(spark.table(sink), ["user_id", "event_type"])
+    counts = event_type_counts_tws(event_stream(spark, sf_dir))
+    updates = _replay(counts, f"twsmap_{uuid.uuid4().hex[:8]}", "update")
+    return _reduce_updates_to_final(updates, ["user_id", "event_type"])
 
 
 # ---------------------------------------------------------------------------
@@ -895,7 +826,8 @@ class DeadLetterSink:
     on disposition, so the two logical tables stay independent scans."""
 
     def __init__(self, base_path: str | None = None) -> None:
-        self.base_path = base_path or tempfile.mkdtemp(prefix="dead_letter_")
+        # a default path lives until exit: the frames table() returns read it
+        self.base_path = base_path or scratch_dir("dead_letter_")
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         split_dead_letter(batch).write.mode("append").partitionBy("disposition").parquet(
@@ -910,14 +842,7 @@ class DeadLetterSink:
         )
 
     def run(self, events: DataFrame) -> None:
-        with _replay_partitions(events.sparkSession):
-            q = (
-                events.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_dlq_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _run_available_now(events.sparkSession, events.writeStream.foreachBatch(self.process_batch))
 
 
 def run_dead_letter(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -951,7 +876,7 @@ class StatusUpsertSink:
         # sizes it so one bucket's state fits an executor (state_bytes /
         # ~256MB); locally 8 keeps per-batch task/file overhead low.
         self.spark = spark
-        self.path = path or tempfile.mkdtemp(prefix="status_upsert_")
+        self.path = path or scratch_dir("status_upsert_")
         self.n_buckets = n_buckets
         # survive a restart-after-crash: state on disk IS state (the
         # latest-wins MERGE is replay-idempotent, but a restarted sink
@@ -1022,14 +947,9 @@ class StatusUpsertSink:
         self._has_state = True
 
     def run(self, statuses: DataFrame) -> None:
-        with _replay_partitions(statuses.sparkSession):
-            q = (
-                statuses.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upsert_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _run_available_now(
+            statuses.sparkSession, statuses.writeStream.foreachBatch(self.process_batch)
+        )
 
 
 class RollupSink:
@@ -1067,7 +987,7 @@ class RollupSink:
 
     def __init__(self, spark: SparkSession, path: str | None = None, n_buckets: int = 8) -> None:
         self.spark = spark
-        self.path = path or tempfile.mkdtemp(prefix="rollup_")
+        self.path = path or scratch_dir("rollup_")
         self.n_buckets = n_buckets
         # survive a restart-after-crash: state on disk IS state
         self._has_state = bool(glob.glob(os.path.join(self.path, "bucket=*")))
@@ -1165,29 +1085,31 @@ class RollupSink:
         self._has_state = True
 
     def run(self, events: DataFrame) -> None:
-        with _replay_partitions(events.sparkSession):
-            q = (
-                events.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_rollup_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _run_available_now(events.sparkSession, events.writeStream.foreachBatch(self.process_batch))
+
+
+def _run_split(df: DataFrame, n_splits: int, run) -> None:
+    """Feed ``df`` to ``run`` as ``n_splits`` real micro-batches: write
+    it as n_splits files and stream them back one file per trigger
+    (maxFilesPerTrigger=1 — a single-file availableNow source collapses
+    to one batch). The split source is dropped once the run ends."""
+    src = scratch_dir("split_src_")
+    try:
+        df.repartition(n_splits).write.mode("overwrite").parquet(src)
+        run(
+            df.sparkSession.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+    finally:
+        drop_scratch_dir(src)
 
 
 def run_rollup_sink(spark: SparkSession, sf_dir: str, n_splits: int = 6) -> DataFrame:
     """Drive RollupSink across ``n_splits`` real micro-batches and
     return the maintained table."""
-    ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="rollup_src_")
-    ev.repartition(n_splits).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     sink = RollupSink(spark)
-    sink.run(stream)
+    _run_split(load_table(spark, sf_dir, "events"), n_splits, sink.run)
     return sink.current()
 
 
@@ -1208,25 +1130,15 @@ def run_status_upsert(spark: SparkSession, sf_dir: str, n_splits: int = 4) -> Da
     """Drive StatusUpsertSink with a multi-micro-batch status stream and
     return the final merged state.
 
-    The derived statuses are split into ``n_splits`` files read with
-    maxFilesPerTrigger=1, so the sink MERGEs across n_splits real
-    micro-batches (a single-file availableNow source would collapse to
-    one batch and never exercise the cross-batch upsert). The final
+    The derived statuses are split into ``n_splits`` real micro-batches
+    (`_run_split`), so the sink MERGEs across batches. The final
     state is batch-order independent: per-key top-1 under the total
     order (updated_at DESC, status DESC) is associative, so any split
     yields the same table — which is what the driver's latest-per-key
     SQL oracle computes directly.
     """
-    statuses = derive_statuses(load_table(spark, sf_dir, "events"))
-    src = tempfile.mkdtemp(prefix="status_src_")
-    statuses.repartition(n_splits).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(statuses.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     sink = StatusUpsertSink(spark)
-    sink.run(stream)
+    _run_split(derive_statuses(load_table(spark, sf_dir, "events")), n_splits, sink.run)
     return sink.current()
 
 
@@ -1263,7 +1175,7 @@ class DedupIngestSink:
 
     def __init__(self, spark: SparkSession, base_path: str | None = None) -> None:
         self.spark = spark
-        self.base_path = base_path or tempfile.mkdtemp(prefix="dedup_ingest_")
+        self.base_path = base_path or scratch_dir("dedup_ingest_")
         self.corpus_path = os.path.join(self.base_path, "corpus")
         self.index_path = os.path.join(self.base_path, "index")
 
@@ -1313,14 +1225,7 @@ class DedupIngestSink:
         return self._index_before(1 << 62)
 
     def run(self, docs: DataFrame) -> None:
-        with _replay_partitions(docs.sparkSession):
-            q = (
-                docs.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ingest_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _run_available_now(docs.sparkSession, docs.writeStream.foreachBatch(self.process_batch))
 
 
 def run_dedup_ingest(
@@ -1329,12 +1234,6 @@ def run_dedup_ingest(
     """Drive DedupIngestSink over the documents table split into
     ``n_splits`` real micro-batches (maxFilesPerTrigger=1); returns the
     deduplicated corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    src = tempfile.mkdtemp(prefix="ingest_src_")
-    docs.repartition(n_splits).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
     sink = sink or DedupIngestSink(spark)
-    sink.run(stream)
+    _run_split(load_table(spark, sf_dir, "documents"), n_splits, sink.run)
     return sink.corpus()

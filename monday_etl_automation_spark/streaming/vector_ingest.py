@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +45,7 @@ from monday_etl_automation_spark.plans.embed_ingest import (
     ivfpq_encode_batch,
     pq_encode_batch,
 )
+from monday_etl_automation_spark.sources.tables import scratch_dir
 
 _VEC_SCHEMA = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
 
@@ -54,7 +54,7 @@ class VectorIngestSink:
     def __init__(self, spark: SparkSession, sf_dir: str, base_path: str | None = None):
         self.spark = spark
         self.sf_dir = sf_dir  # the snapshot whose trained quantizers encode every batch
-        self.base_path = base_path or tempfile.mkdtemp(prefix="vector_ingest_")
+        self.base_path = base_path or scratch_dir("vector_ingest_")
         self.vectors_path = os.path.join(self.base_path, "vectors")
         self.buckets_path = os.path.join(self.base_path, "buckets")
         self.ivf_path = os.path.join(self.base_path, "ivf")

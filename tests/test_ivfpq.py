@@ -3,14 +3,17 @@ persisted-index search plan."""
 
 from __future__ import annotations
 
+import pytest
+
 from monday_etl_automation_spark.plans.embed_ops import cosine_topk
 from monday_etl_automation_spark.plans.ivfpq_ops import (
     _ivfpq_sql,
     _train_ivfpq,
     ivfpq_topk,
 )
-from monday_etl_automation_spark.plans.pq_ops import _M
+from monday_etl_automation_spark.plans.pq_ops import _M, _codes_arr_sql
 from tests.oracle_compare import assert_matches_oracle
+from tests.plan_helpers import final_plan, hash_exchange_keys
 
 _RECALL_SF = "/root/testdata/sf0.01"
 
@@ -58,13 +61,28 @@ def test_ivfpq_folded_search_plan(spark, sf_dir):
     exploded codes per execution — no hash-partitioning exchange, no
     SortMergeJoin of the checkpointed KB-sized metadata (stats-less
     ExistingRDD scans need the explicit broadcast hints), no
-    CartesianProduct."""
-    from monday_etl_automation_spark.plans.ivfpq_ops import ivfpq_topk
-
-    df = ivfpq_topk(spark, sf_dir)
-    plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"  # noqa: SLF001
-    )
+    CartesianProduct. Audited on the executed plan: its one hash
+    shuffle is the final per-query rank window's."""
+    plan = final_plan(ivfpq_topk(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") == 0
+    assert hash_exchange_keys(plan) == ["query_id"]
+
+
+def test_ivfpq_plan_counter_fires(spark, sf_dir):
+    """Sabotage: the counter the pin above relies on must see a hash
+    shuffle that is added to the same search."""
+    plan = final_plan(ivfpq_topk(spark, sf_dir).groupBy("neighbor_id").count())
+    assert sorted(hash_exchange_keys(plan)) == ["neighbor_id", "query_id"]
+
+
+def test_ivfpq_codes_array_fails_on_missing_code_row(spark, sf_dir):
+    """The folded (vec_id, cid) codes array must fail loudly, not rank
+    a member last on a NULL slot, when a (sub, code) row is missing."""
+    _, _, vparts = _train_ivfpq(spark, sf_dir)
+    vparts.createOrReplaceTempView("_ipq_vparts_ok")
+    assert spark.sql(_codes_arr_sql("_ipq_vparts_ok", "vec_id, cid")).count() > 0
+    victim = vparts.select("vec_id").first()["vec_id"]
+    vparts.where(f"NOT (vec_id = {victim} AND sub = 5)").createOrReplaceTempView("_ipq_vparts_bad")
+    with pytest.raises(Exception, match="lacks one of its"):
+        spark.sql(_codes_arr_sql("_ipq_vparts_bad", "vec_id, cid")).collect()

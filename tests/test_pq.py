@@ -7,9 +7,20 @@ for registered queries.
 
 from __future__ import annotations
 
+import pytest
+
 from monday_etl_automation_spark.plans.embed_ops import cosine_topk
-from monday_etl_automation_spark.plans.pq_ops import _CAND, _K, _M, _pq_sql, _train_pq, pq_topk
+from monday_etl_automation_spark.plans.pq_ops import (
+    _CAND,
+    _K,
+    _M,
+    _codes_arr_sql,
+    _pq_sql,
+    _train_pq,
+    pq_topk,
+)
 from tests.oracle_compare import assert_matches_oracle
+from tests.plan_helpers import final_plan, hash_exchange_keys
 
 # recall is statistical: measure where the query set is large enough
 # for stable floors (same rationale as tests/test_ann_recall.py)
@@ -60,11 +71,28 @@ def test_pq_folded_search_plan(spark, sf_dir):
     up to the per-query window — no hash-partitioning exchange from an
     exploded-codes aggregation (guide §2.4), no CartesianProduct (the
     bounded query side must broadcast), no SortMergeJoin of the
-    KB-sized metadata relations."""
-    df = pq_topk(spark, sf_dir)
-    plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"  # noqa: SLF001
-    )
+    KB-sized metadata relations. Audited on the executed plan: its one
+    hash shuffle is the candidate window's, keyed on the query id."""
+    plan = final_plan(pq_topk(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") == 0
+    assert hash_exchange_keys(plan) == ["qid"]
+
+
+def test_pq_plan_counter_fires(spark, sf_dir):
+    """Sabotage: the counter the pin above relies on must see a hash
+    shuffle that is added to the same search."""
+    plan = final_plan(pq_topk(spark, sf_dir).groupBy("neighbor_id").count())
+    assert sorted(hash_exchange_keys(plan)) == ["neighbor_id", "qid"]
+
+
+def test_pq_codes_array_fails_on_missing_code_row(spark, sf_dir):
+    """The folded codes array must fail loudly, not rank a vector last
+    on a NULL slot, when a (sub, code) row is missing."""
+    codes, _ = _train_pq(spark, sf_dir)
+    codes.createOrReplaceTempView("_pq_codes_ok")
+    assert spark.sql(_codes_arr_sql("_pq_codes_ok", "vec_id")).count() > 0
+    victim = codes.select("vec_id").first()["vec_id"]
+    codes.where(f"NOT (vec_id = {victim} AND sub = 3)").createOrReplaceTempView("_pq_codes_bad")
+    with pytest.raises(Exception, match="lacks one of its"):
+        spark.sql(_codes_arr_sql("_pq_codes_bad", "vec_id")).collect()

@@ -679,3 +679,52 @@ def test_timer_oracle_millisecond_boundary_fixture(spark, sf_dir, tmp_path_facto
     finally:
         clear_artifact_caches(spark)
         spark._mea_views_sf_dir = None
+
+
+def test_engine_dirs_have_one_owner(spark, sf_dir, tmp_path, monkeypatch):
+    """Every directory the streaming layer creates under the temp root
+    is owned by the scratch registry, and no per-run checkpoint or
+    split source outlives its run. A path the caller passes in is
+    never registered, so the registry never deletes it."""
+    import os
+    import tempfile
+
+    from monday_etl_automation_spark.sources import tables
+    from monday_etl_automation_spark.streaming import pipeline as sp
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sp.run_replay(spark, sf_dir)
+    # a variant no other test builds, so its cached source lands here
+    sp.run_timer_sessions_replay(spark, sf_dir, n_splits=2, users_mod=11)
+    sp.run_dead_letter(spark, sf_dir)
+    sp.run_status_upsert(spark, sf_dir, 2)
+    sp.run_rollup_sink(spark, sf_dir, 2)
+    sp.run_dedup_ingest(spark, sf_dir, 2)
+
+    left = sorted(os.listdir(tmp_path))
+    assert [d for d in left if d.startswith(("ckpt_", "split_src_"))] == []
+    # the sinks' default paths and the cached timer source stay, owned
+    prefixes = ("dead_letter_", "status_upsert_", "rollup_", "dedup_ingest_", "timer_src_")
+    assert sorted(p for p in prefixes if any(d.startswith(p) for d in left)) == sorted(prefixes)
+    assert [d for d in left if str(tmp_path / d) not in tables._SCRATCH_DIRS] == []
+
+    mine = tmp_path / "caller_owned"
+    mine.mkdir()
+    tables.drop_scratch_dir(str(mine))
+    tables.drop_scratch_dir((str(mine),))
+    assert mine.is_dir()
+
+
+def test_only_the_scratch_registry_makes_temp_dirs():
+    """One owner for engine directories: no module but the registry in
+    sources/tables.py creates a temp dir or registers an exit hook."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "monday_etl_automation_spark"
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if re.search(r"mkdtemp|\batexit\b", p.read_text(encoding="utf-8"))
+    ]
+    assert offenders == [str(pathlib.Path("sources", "tables.py"))]
